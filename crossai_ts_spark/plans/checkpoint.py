@@ -2,14 +2,19 @@
 
 Unit of work = a doc-hash bucket: ``bucket = pmod(xxhash64(doc_id), B)``.
 Deterministic, uniform even under Zipfian source/doc skew, and prunable —
-the output is laid out ``tier=K/bucket=B`` so both retention queries and
+the output is laid out ``bucket=B/tier=K`` so both retention queries and
 resume touch only the partitions they need.
 
-Commit protocol per bucket (works on any posix-ish FS; Iceberg snapshots
-replace it when the catalog is available):
-  1. write parquet to   out/_tmp/bucket=B/
-  2. fsync-free atomic  rename -> out/data/bucket=B/        (idempotent)
-  3. write manifest     out/_manifests/B.json  (temp + rename, atomic)
+Commit protocol for all pending buckets at once (works on any posix-ish FS;
+Iceberg snapshots replace it when the catalog is available):
+  1. remove a stale     out/_tmp/              (half-write of a dead attempt)
+  2. write parquet once out/_tmp/<run_id>/bucket=B/tier=K/   (every bucket)
+  3. one stats pass     groupBy(bucket, tier) over out/_tmp/<run_id>/
+  4. per bucket:        fsync-free atomic rename -> out/data/bucket=B/
+                        (idempotent), then manifest out/_manifests/B.json
+                        (temp + rename, atomic)
+The manifest is the commit point: a bucket without one is pending whatever
+sits under data/, so a crash anywhere in 1-4 resumes cleanly.
 
 Manifest carries lineage + metrics per tier: rows, token counts, min/max
 window_start, wall time, input snapshot id, code version — the judge-facing
@@ -74,13 +79,16 @@ def write_manifest(out_dir: str, bucket: int, payload: dict) -> None:
 def commit_bucket(
     tier_df: DataFrame,
     out_dir: str,
-    bucket: int,
+    buckets: list[int],
     input_snapshot: str,
-    extra_metrics: dict | None = None,
-) -> dict:
-    """Materialize one bucket's tier rows with the atomic commit protocol.
+) -> dict[int, dict]:
+    """Materialize the tier rows of every bucket in ``buckets`` with one
+    write, then commit each bucket with the atomic commit protocol.
 
-    Returns the manifest payload (also written to disk).
+    ``tier_df`` carries a ``bucket`` column (:func:`with_bucket`); rows of
+    buckets not in ``buckets`` are discarded. Returns ``{bucket: manifest
+    payload}`` (each also written to disk); a bucket with no rows gets empty
+    ``tiers``. ``wall_sec`` is the shared wall of the write and stats pass.
 
     The atomic-rename commit requires a DRIVER-LOCAL posix path: Spark
     writes the parquet, but validation + rename run through os/shutil on
@@ -105,18 +113,19 @@ def commit_bucket(
             )
         out_dir = parsed.path
     t0 = time.monotonic()
-    tmp_dir = os.path.join(out_dir, "_tmp", f"bucket={bucket}")
-    final_dir = os.path.join(out_dir, "data", f"bucket={bucket}")
-    if os.path.isdir(tmp_dir):
-        shutil.rmtree(tmp_dir)  # stale half-write from a dead attempt
+    tmp_root = os.path.join(out_dir, "_tmp")
+    if os.path.isdir(tmp_root):
+        shutil.rmtree(tmp_root)  # stale half-write from a dead attempt
+    tmp_dir = os.path.join(tmp_root, uuid.uuid4().hex)
 
-    tier_df.write.mode("overwrite").partitionBy("tier").parquet(tmp_dir)
+    tier_df.write.mode("overwrite").partitionBy("bucket", "tier").parquet(tmp_dir)
 
-    # per-tier lineage metrics from what was actually written
-    spark = tier_df.sparkSession
-    written = spark.read.parquet(tmp_dir)
+    # per-(bucket, tier) lineage metrics from what was actually written; the
+    # schema is given because a write of no rows leaves no file to infer from
     stats = (
-        written.groupBy("tier")
+        tier_df.sparkSession.read.schema(tier_df.schema)
+        .parquet(tmp_dir)
+        .groupBy("bucket", "tier")
         .agg(
             F.count("*").alias("rows"),
             F.sum("t_cnt").alias("tokens"),
@@ -126,28 +135,35 @@ def commit_bucket(
         )
         .collect()
     )
-    if os.path.isdir(final_dir):
-        shutil.rmtree(final_dir)  # idempotent re-commit
-    os.makedirs(os.path.dirname(final_dir), exist_ok=True)
-    os.replace(tmp_dir, final_dir)
-
-    payload = {
-        "bucket": bucket,
-        "input_snapshot": input_snapshot,
-        "code_version": __version__,
-        "committed_at_unix": time.time(),
-        "wall_sec": time.monotonic() - t0,
-        "tiers": {
-            str(r.tier): {
+    wall = time.monotonic() - t0
+    tiers: dict[int, dict] = {b: {} for b in buckets}
+    for r in stats:
+        if r.bucket in tiers:
+            tiers[r.bucket][str(r.tier)] = {
                 "rows": r.rows,
                 "tokens": int(r.tokens),
                 "docs": r.docs,
                 "min_window_start": int(r.min_ws),
                 "max_window_start": int(r.max_ws),
             }
-            for r in stats
-        },
-        **(extra_metrics or {}),
-    }
-    write_manifest(out_dir, bucket, payload)
-    return payload
+
+    os.makedirs(os.path.join(out_dir, "data"), exist_ok=True)
+    manifests = {}
+    for b in buckets:
+        src = os.path.join(tmp_dir, f"bucket={b}")
+        final_dir = os.path.join(out_dir, "data", f"bucket={b}")
+        if os.path.isdir(final_dir):
+            shutil.rmtree(final_dir)  # idempotent re-commit
+        if os.path.isdir(src):  # a bucket with no rows writes no directory
+            os.replace(src, final_dir)
+        manifests[b] = {
+            "bucket": b,
+            "input_snapshot": input_snapshot,
+            "code_version": __version__,
+            "committed_at_unix": time.time(),
+            "wall_sec": wall,
+            "tiers": tiers[b],
+        }
+        write_manifest(out_dir, b, manifests[b])
+    shutil.rmtree(tmp_root)
+    return manifests

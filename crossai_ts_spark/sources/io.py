@@ -2,7 +2,7 @@
 partitioned parquet otherwise — one interface either way (SURVEY §7.1).
 
 The sandbox image has no Iceberg jar, so the parquet path is first-class:
-identical schema, hive-style ``tier=K/bucket=B`` layout (partition pruning
+identical schema, hive-style ``bucket=B/tier=K`` layout (partition pruning
 on both columns), and atomic per-partition commits via temp-dir + rename
 used by plans/checkpoint.py.
 """

@@ -6,10 +6,14 @@
         --buckets 16 [--w 64 --fanout 64 --tiers 3] \
         [--compress] [--resume] [--strategy native|pandas]
 
-Each bucket (pmod(xxhash64(doc_id), B)) commits atomically with a lineage +
-metrics manifest; --resume anti-joins completed manifests and processes only
-pending buckets (north_rule: "resumable from per-partition checkpoints with
-lineage + metrics emitted per retention tier").
+The unit of resume is a bucket, pmod(xxhash64(doc_id), B). One run scans
+the input once, filtered to the pending buckets, runs one cascade over
+them, and writes every pending bucket's tier rows in one pass
+(partitioned bucket=B/tier=K); each bucket then commits atomically with a
+lineage + metrics manifest (plans/checkpoint.commit_bucket). --resume
+anti-joins completed manifests and processes only pending buckets
+(north_rule: "resumable from per-partition checkpoints with lineage +
+metrics emitted per retention tier").
 """
 
 from __future__ import annotations
@@ -62,13 +66,16 @@ def main(argv: list[str] | None = None) -> int:
     todo = pending_buckets(args.out, args.buckets) if args.resume else list(range(args.buckets))
     print(f"[rollup_job] buckets total={args.buckets} pending={len(todo)}")
     t0 = time.monotonic()
-    for b in todo:
-        sub = seqs.filter(F.col("bucket") == b).drop("bucket")
+    if todo:
+        # one scan and one cascade over every pending bucket; a tier row's
+        # bucket is re-derived from its doc_id, so it lands where its doc did
+        sub = seqs.filter(F.col("bucket").isin(todo)).drop("bucket")
         tiers_df = cascade(sub, strategy=args.strategy, w=args.w, fanout=args.fanout, tiers=args.tiers)
-        m = commit_bucket(tiers_df, args.out, b, input_snapshot=snapshot)
-        toks = sum(t["tokens"] for t in m["tiers"].values())
-        print(f"[rollup_job] bucket={b} rows={sum(t['rows'] for t in m['tiers'].values())} "
-              f"tokens={toks} wall={m['wall_sec']:.1f}s")
+        manifests = commit_bucket(with_bucket(tiers_df, args.buckets), args.out, todo, input_snapshot=snapshot)
+        for b, m in manifests.items():
+            toks = sum(t["tokens"] for t in m["tiers"].values())
+            print(f"[rollup_job] bucket={b} rows={sum(t['rows'] for t in m['tiers'].values())} "
+                  f"tokens={toks} wall={m['wall_sec']:.1f}s")
 
     if args.compress and todo:
         tiers_all = spark.read.parquet(f"{args.out}/data")
